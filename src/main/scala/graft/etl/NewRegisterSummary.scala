@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *  - the registration join is on player_name ONLY
   *    (new_register_summary_1d.py:113-114) even though platform/site_code are
   *    available — a cross-platform name collision would leak rows; the
-  *    engine reproduces that and `strictJoin=true` offers the tightened key
+  *    engine reproduces that
   *  - the reference reads SUM(wl_amount) from player_summary_5min although
   *    the 5min writer emits w_amount (SURVEY §1.3) — the physical DB is the
   *    schema authority there; the engine standardizes on w_amount.
@@ -25,51 +25,32 @@ object NewRegisterSummary {
 
   val grain = Seq("platform", "site_code", "game_code", "country")
 
-  def oneDay(playerSummary5min: DataFrame, players: DataFrame, slice: TaskSlice,
-      strictJoin: Boolean = false): DataFrame = {
-    val gteTs = slice.gte_time.toLocalDateTime
-    val gte = gteTs.toString.replace('T', ' ')
-    val lt = slice.lt_time.toLocalDateTime.toString.replace('T', ' ')
-    val d = gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
+  private val sums = Seq(
+    "b_count", "b_amount", "w_amount", "fee_amount", "profit_amount", "refund_amount")
+    .map(c => sum(col(c)).as(c))
 
+  def oneDay(playerSummary5min: DataFrame, players: DataFrame, slice: TaskSlice): DataFrame = {
     // New NORMAL members registered inside the day slice.
     val newReg = players
-      .filter(inWindow(col("reg_time"), gte, lt))
+      .filter(inWindow(col("reg_time"), slice.gteStr, slice.ltStr))
       .filter(col("type") === "NORMAL")
-      .select("player_name", "platform", "site_code")
+      .select("player_name")
 
     // The day's per-player sums from the 5min tier (the reference pins
     // platform/site_code from the task row; ALL wildcards cover the rest).
     val daySums = playerSummary5min
-      .filter(col("summary_date") === d)
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .filter(eqOrAll(col("game_code"), slice.game_code))
-      .groupBy(col("platform"), col("site_code"), col("game_code"),
-        col("player_name"), col("country"))
-      .agg(
-        sum(col("b_count")).as("b_count"),
-        sum(col("b_amount")).as("b_amount"),
-        sum(col("w_amount")).as("w_amount"),
-        sum(col("fee_amount")).as("fee_amount"),
-        sum(col("profit_amount")).as("profit_amount"),
-        sum(col("refund_amount")).as("refund_amount"))
+      .filter(col("summary_date") === slice.dateInt)
+      .filter(slice.scope(withGame = true))
+      .groupBy(PlayerSummary.keys.map(col): _*)
+      .agg(sums.head, sums.tail: _*)
 
-    val joinKeys = if (strictJoin) Seq("player_name", "platform", "site_code") else Seq("player_name")
-    val regData = daySums.join(broadcast(newReg.select(joinKeys.map(col): _*)), joinKeys, "left_semi")
+    val regData = daySums.join(broadcast(newReg), Seq("player_name"), "left_semi")
 
     // A10: sums + member count in ONE aggregation (the reference runs
     // separate .sum() and .count() groupbys and merges them back).
     regData
       .groupBy(grain.map(col): _*)
-      .agg(
-        sum(col("b_count")).as("b_count"),
-        sum(col("b_amount")).as("b_amount"),
-        sum(col("w_amount")).as("w_amount"),
-        sum(col("fee_amount")).as("fee_amount"),
-        sum(col("profit_amount")).as("profit_amount"),
-        sum(col("refund_amount")).as("refund_amount"),
-        count(col("player_name")).as("reg_count"))
-      .withColumn("summary_date", lit(d))
+      .agg(count(col("player_name")).as("reg_count"), sums: _*)
+      .withColumn("summary_date", lit(slice.dateInt))
   }
 }

@@ -33,91 +33,68 @@ object Pipeline {
     val newRegister1d = s"$base/new_register_summary_1d"
   }
 
-  private def daySlices(day: java.time.LocalDate): (TaskSlice, Seq[TaskSlice]) = {
-    val d0 = day.atStartOfDay()
-    def ts(x: java.time.LocalDateTime) = java.sql.Timestamp.valueOf(x)
-    val daySlice = TaskSlice(freq_type = "1D", gte_time = ts(d0), lt_time = ts(d0.plusDays(1)))
-    val hourSlices = (0 until 24).map(h => TaskSlice(freq_type = "1H",
-      gte_time = ts(d0.plusHours(h)), lt_time = ts(d0.plusHours(h + 1))))
-    (daySlice, hourSlices)
+  private def ts(x: java.time.LocalDateTime) = java.sql.Timestamp.valueOf(x)
+
+  private def daySlice(day: java.time.LocalDate): TaskSlice = TaskSlice(freq_type = "1D",
+    gte_time = ts(day.atStartOfDay()), lt_time = ts(day.plusDays(1).atStartOfDay()))
+
+  private def write(df: DataFrame, path: String): Unit =
+    Sinks.overwriteSlices(df, path, Seq("summary_date"))
+
+  /** One day of a cascade: the 5min tier in one pass over the raw log, then
+    * the day's whole 1h tier in one aggregation over the 5min tier it wrote,
+    * then the 1d tier over the 1h tier. */
+  private def runDay(spark: SparkSession, day: java.time.LocalDate,
+      fiveMin: TaskSlice => DataFrame, rollup: (DataFrame, String, TaskSlice) => DataFrame,
+      fiveMinPath: String, hourPath: String, dayPath: String): Unit = {
+    val slice = daySlice(day)
+    write(fiveMin(slice), fiveMinPath)
+    write(rollup(spark.read.parquet(fiveMinPath), "1H", slice), hourPath)
+    write(rollup(spark.read.parquet(hourPath), "1D", slice), dayPath)
   }
 
   /** Run one day of the trans_summary cascade end-to-end. */
   def runTransDay(spark: SparkSession, valueLog: DataFrame, paths: Paths,
-      day: java.time.LocalDate): Unit = {
-    val (daySlice, hourSlices) = daySlices(day)
-    val d0s = day.atStartOfDay().toString.replace('T', ' ')
-    val d1s = day.plusDays(1).atStartOfDay().toString.replace('T', ' ')
-
-    val fiveMin = TransSummary.fiveMinRange(valueLog, d0s, d1s)
-      .withColumn("start_time", col("start_time"))
-    Sinks.overwriteSlices(fiveMin, paths.trans5min, Seq("summary_date"))
-
-    val tier5 = spark.read.parquet(paths.trans5min)
-    val oneHour = hourSlices.map(TransSummary.oneHour(tier5, _)).reduce(_ unionByName _)
-    Sinks.overwriteSlices(oneHour, paths.trans1h, Seq("summary_date"))
-
-    val tier1h = spark.read.parquet(paths.trans1h)
-    Sinks.overwriteSlices(TransSummary.oneDay(tier1h, daySlice), paths.trans1d, Seq("summary_date"))
-  }
+      day: java.time.LocalDate): Unit =
+    runDay(spark, day, s => TransSummary.fiveMinRange(valueLog, s.gteStr, s.ltStr),
+      TransSummary.rollup, paths.trans5min, paths.trans1h, paths.trans1d)
 
   /** Run one day of the player_summary cascade end-to-end. */
   def runPlayerDay(spark: SparkSession, profitLog: DataFrame, gameSites: DataFrame,
-      paths: Paths, day: java.time.LocalDate, cfg: RtpConfig = RtpConfig()): Unit = {
-    val (daySlice, hourSlices) = daySlices(day)
-    val d0s = day.atStartOfDay().toString.replace('T', ' ')
-    val d1s = day.plusDays(1).atStartOfDay().toString.replace('T', ' ')
-
-    val fiveMin = PlayerSummary.fiveMinRange(profitLog, gameSites, d0s, d1s, cfg)
-    Sinks.overwriteSlices(fiveMin, paths.player5min, Seq("summary_date"))
-
-    val tier5 = spark.read.parquet(paths.player5min)
-    val oneHour = hourSlices.map(PlayerSummary.oneHour(tier5, _, cfg)).reduce(_ unionByName _)
-    Sinks.overwriteSlices(oneHour, paths.player1h, Seq("summary_date"))
-
-    val tier1h = spark.read.parquet(paths.player1h)
-    Sinks.overwriteSlices(PlayerSummary.oneDay(tier1h, daySlice, cfg), paths.player1d, Seq("summary_date"))
-  }
+      paths: Paths, day: java.time.LocalDate, cfg: RtpConfig = RtpConfig()): Unit =
+    runDay(spark, day, s => PlayerSummary.fiveMinRange(profitLog, gameSites, s.gteStr, s.ltStr, cfg),
+      PlayerSummary.rollup(_, _, _, cfg), paths.player5min, paths.player1h, paths.player1d)
 
   /** Monthly rollup for both cascades (consumes the materialized 1d tiers;
     * re-run every cycle while the month is open, exactly like the reference's
     * realtime 1m tasks — idempotent via partition overwrite). */
   def runMonth(spark: SparkSession, paths: Paths, month: java.time.YearMonth): Unit = {
-    def ts(x: java.time.LocalDateTime) = java.sql.Timestamp.valueOf(x)
-    val slice = TaskSlice(freq_type = "1M",
-      gte_time = ts(month.atDay(1).atStartOfDay()),
+    val slice = TaskSlice(freq_type = "1M", gte_time = ts(month.atDay(1).atStartOfDay()),
       lt_time = ts(month.plusMonths(1).atDay(1).atStartOfDay()))
-    val trans1d = spark.read.parquet(paths.trans1d)
-    Sinks.overwriteSlices(TransSummary.oneMonth(trans1d, slice),
+    Sinks.overwriteSlices(TransSummary.rollup(spark.read.parquet(paths.trans1d), "1M", slice),
       s"${paths.base}/trans_summary_1m", Seq("summary_month"))
-    val player1d = spark.read.parquet(paths.player1d)
-    Sinks.overwriteSlices(PlayerSummary.oneMonth(player1d, slice),
+    Sinks.overwriteSlices(PlayerSummary.rollup(spark.read.parquet(paths.player1d), "1M", slice),
       s"${paths.base}/player_summary_1m", Seq("summary_month"))
   }
 
   /** Risk + registration reports for one day (consume the materialized tiers). */
   def runReportsDay(spark: SparkSession, players: DataFrame, paths: Paths,
       day: java.time.LocalDate, now: java.sql.Timestamp): Unit = {
-    val (daySlice, _) = daySlices(day)
+    val slice = daySlice(day)
     val ps1h = spark.read.parquet(paths.player1h)
     val ps1d = spark.read.parquet(paths.player1d)
     val ts1h = spark.read.parquet(paths.trans1h)
     val ts1d = spark.read.parquet(paths.trans1d)
 
-    Sinks.overwriteSlices(
-      RiskCtrl.playerOneDay(ps1h, ts1h, ps1d, ts1d, daySlice),
-      paths.riskPlayer1d, Seq("summary_date"))
-    Sinks.overwriteSlices(
-      RiskCtrl.gameOneDay(ps1h, ps1d, daySlice),
-      paths.riskGame1d, Seq("summary_date"))
+    write(RiskCtrl.playerOneDay(ps1h, ts1h, ps1d, ts1d, slice), paths.riskPlayer1d)
+    write(RiskCtrl.gameOneDay(ps1h, ps1d, slice), paths.riskGame1d)
 
-    val snapshot = RiskCtrl.rtpSnapshot(ps1h, daySlice)
-    val dInt = day.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
+    val snapshot = RiskCtrl.rtpSnapshot(ps1h, slice)
     val old = Sinks.readOrEmpty(spark, paths.riskRtp1d, snapshot.schema)
     // the ledger merge operates on THIS day's partition (the reference reads
     // WHERE summary_date = d); first run has no ledger columns yet -> empty
     val oldForDay =
-      if (old.columns.contains("alert_count")) old.filter(col("summary_date") === dInt)
+      if (old.columns.contains("alert_count")) old.filter(col("summary_date") === slice.dateInt)
       else old.limit(0)
     // The merge below dynamic-partition-overwrites the SAME path the ledger
     // was just read from. Path-based V1 overwrites bypass Spark's
@@ -126,13 +103,9 @@ object Pipeline {
     // old rows BEFORE the target partitions are replaced, cutting the lineage
     // back to the files being overwritten.
     val oldMaterialized = oldForDay.localCheckpoint()
-    Sinks.overwriteSlices(
-      RiskCtrl.rtpLedgerMerge(oldMaterialized, snapshot, now),
-      paths.riskRtp1d, Seq("summary_date"))
+    write(RiskCtrl.rtpLedgerMerge(oldMaterialized, snapshot, now), paths.riskRtp1d)
 
     val ps5 = spark.read.parquet(paths.player5min)
-    Sinks.overwriteSlices(
-      NewRegisterSummary.oneDay(ps5, players, daySlice),
-      paths.newRegister1d, Seq("summary_date"))
+    write(NewRegisterSummary.oneDay(ps5, players, slice), paths.newRegister1d)
   }
 }

@@ -26,19 +26,39 @@ object RiskCtrl {
   val playerKeys = Seq("platform", "site_code", "player_name", "country")
   val gameKeys = Seq("platform", "site_code", "game_code", "country")
 
-  private def dateInt(slice: TaskSlice): Int =
-    slice.gte_time.toLocalDateTime.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
+  /** Today's bet/profit sums and weighted rtp per `keys`, from the 1h tier. */
+  private def currentDay(playerSummary1h: DataFrame, slice: TaskSlice,
+      keys: Seq[String]): DataFrame =
+    playerSummary1h
+      .filter(slice.scope(withGame = true))
+      .filter(col("summary_date") === slice.dateInt)
+      .groupBy(keys.map(col): _*)
+      .agg(
+        sum(col("b_amount")).as("b_cur"),
+        sum(col("profit_amount")).as("p_cur"),
+        safeDiv(sum(col("profit_amount")), sum(col("b_amount"))).as("rtp_cur"))
 
-  private def dateIntMinus(slice: TaskSlice, days: Int): Int =
-    slice.gte_time.toLocalDateTime.minusDays(days)
-      .format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-
-  private def wildcardFilters(df: DataFrame, slice: TaskSlice, withGame: Boolean): DataFrame = {
-    val base = df
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-    if (withGame) base.filter(eqOrAll(col("game_code"), slice.game_code)) else base
+  /** A5 two-stage trailing WMA per `keys`: each `daily` measure aggregated
+    * per day of the 1d tier inside `[d-8, d)`, then `<name>_wma` = SUM/7 and
+    * `<name>_wmasd` = STDDEV_POP over those days. */
+  private def trailingWma(tier1d: DataFrame, slice: TaskSlice, keys: Seq[String],
+      daily: Seq[(String, Column)]): DataFrame = {
+    val k = keys.map(col)
+    val perDay = daily.map { case (n, c) => c.as(n) }
+    val wma = daily.flatMap { case (n, _) =>
+      Seq((sum(col(n)) / 7.0).as(s"${n}_wma"), stddev_pop(col(n)).as(s"${n}_wmasd"))
+    }
+    tier1d
+      .filter(col("summary_date") >= dateInt(slice.day.minusDays(8)) &&
+        col("summary_date") < slice.dateInt)
+      .groupBy(col("summary_date") +: k: _*)
+      .agg(perDay.head, perDay.tail: _*)
+      .groupBy(k: _*)
+      .agg(wma.head, wma.tail: _*)
   }
+
+  private val betProfitDaily =
+    Seq("b" -> sum(col("b_amount")), "p" -> sum(col("profit_amount")))
 
   // -------------------------------------------------------------------------
   // risk_ctrl_player_1d (risk_ctrl_player_1d.py)
@@ -49,49 +69,19 @@ object RiskCtrl {
   def playerMeta(playerSummary1h: DataFrame, transSummary1h: DataFrame,
       playerSummary1d: DataFrame, transSummary1d: DataFrame,
       slice: TaskSlice): DataFrame = {
-    val d = dateInt(slice)
-    val d8 = dateIntMinus(slice, 8)
-    val k = playerKeys.map(col)
+    val net = col("trans_out_amount") - col("trans_in_amount")
+    val currentTrans = transSummary1h
+      .filter(slice.scope(withGame = false))
+      .filter(col("summary_date") === slice.dateInt)
+      .groupBy(playerKeys.map(col): _*)
+      .agg(sum(net).as("net_trans_cur"))
 
-    val current = wildcardFilters(playerSummary1h, slice, withGame = true)
-      .filter(col("summary_date") === d)
-      .groupBy(k: _*)
-      .agg(
-        sum(col("b_amount")).as("b_cur"),
-        sum(col("profit_amount")).as("p_cur"),
-        safeDiv(sum(col("profit_amount")), sum(col("b_amount"))).as("rtp_cur"))
-
-    val currentTrans = wildcardFilters(transSummary1h, slice, withGame = false)
-      .filter(col("summary_date") === d)
-      .groupBy(k: _*)
-      .agg(sum(col("trans_out_amount") - col("trans_in_amount")).as("net_trans_cur"))
-
-    // A5 two-stage: per-day sums inside [d-8, d), then SUM/7 + STDDEV_POP.
-    val pDay = playerSummary1d
-      .filter(col("summary_date") >= d8 && col("summary_date") < d)
-      .groupBy((col("summary_date") +: k): _*)
-      .agg(sum(col("b_amount")).as("b_day"), sum(col("profit_amount")).as("p_day"))
-    val pWma = pDay.groupBy(k: _*)
-      .agg(
-        (sum(col("b_day")) / 7.0).as("b_wma"),
-        (sum(col("p_day")) / 7.0).as("p_wma"),
-        stddev_pop(col("b_day")).as("b_wmasd"),
-        stddev_pop(col("p_day")).as("p_wmasd"))
-
-    val tDay = transSummary1d
-      .filter(col("summary_date") >= d8 && col("summary_date") < d)
-      .groupBy((col("summary_date") +: k): _*)
-      .agg(first(col("trans_out_amount") - col("trans_in_amount")).as("net_day"))
-    val tWma = tDay.groupBy(k: _*)
-      .agg(
-        (sum(col("net_day")) / 7.0).as("net_trans_wma"),
-        stddev_pop(col("net_day")).as("net_trans_wmasd"))
-
-    current
+    currentDay(playerSummary1h, slice, playerKeys)
       .join(currentTrans, playerKeys, "left")
-      .join(pWma, playerKeys, "left")
-      .join(tWma, playerKeys, "left")
-      .withColumn("summary_date", lit(d))
+      .join(trailingWma(playerSummary1d, slice, playerKeys, betProfitDaily), playerKeys, "left")
+      .join(trailingWma(transSummary1d, slice, playerKeys, Seq("net_trans" -> first(net))),
+        playerKeys, "left")
+      .withColumn("summary_date", lit(slice.dateInt))
       .na.fill(0.0)
   }
 
@@ -203,34 +193,11 @@ object RiskCtrl {
   // -------------------------------------------------------------------------
 
   def gameMeta(playerSummary1h: DataFrame, playerSummary1d: DataFrame,
-      slice: TaskSlice): DataFrame = {
-    val d = dateInt(slice)
-    val d8 = dateIntMinus(slice, 8)
-    val k = gameKeys.map(col)
-
-    val current = wildcardFilters(playerSummary1h, slice, withGame = true)
-      .filter(col("summary_date") === d)
-      .groupBy(k: _*)
-      .agg(
-        sum(col("b_amount")).as("b_cur"),
-        sum(col("profit_amount")).as("p_cur"),
-        safeDiv(sum(col("profit_amount")), sum(col("b_amount"))).as("rtp_cur"))
-
-    val day = playerSummary1d
-      .filter(col("summary_date") >= d8 && col("summary_date") < d)
-      .groupBy((col("summary_date") +: k): _*)
-      .agg(sum(col("b_amount")).as("b_day"), sum(col("profit_amount")).as("p_day"))
-    val wma = day.groupBy(k: _*)
-      .agg(
-        (sum(col("b_day")) / 7.0).as("b_wma"),
-        (sum(col("p_day")) / 7.0).as("p_wma"),
-        stddev_pop(col("b_day")).as("b_wmasd"),
-        stddev_pop(col("p_day")).as("p_wmasd"))
-
-    current.join(wma, gameKeys, "left")
-      .withColumn("summary_date", lit(d))
+      slice: TaskSlice): DataFrame =
+    currentDay(playerSummary1h, slice, gameKeys)
+      .join(trailingWma(playerSummary1d, slice, gameKeys, betProfitDaily), gameKeys, "left")
+      .withColumn("summary_date", lit(slice.dateInt))
       .na.fill(0.0)
-  }
 
   def gameOneDay(playerSummary1h: DataFrame, playerSummary1d: DataFrame, slice: TaskSlice,
       floors: SigmaFloors = SigmaFloors.game, rates: CountryRates = CountryRates(),
@@ -248,16 +215,16 @@ object RiskCtrl {
     * (risk_ctrl_rtp_1d.py:77-118). */
   def rtpSnapshot(playerSummary1h: DataFrame, slice: TaskSlice,
       cfg: RtpConfig = RtpConfig()): DataFrame = {
-    val d = dateInt(slice)
-    val snap = wildcardFilters(playerSummary1h, slice, withGame = true)
-      .filter(col("summary_date") === d)
+    val snap = playerSummary1h
+      .filter(slice.scope(withGame = true))
+      .filter(col("summary_date") === slice.dateInt)
       .groupBy(rtpKeys.map(col): _*)
       .agg(
         count(col("b_amount")).as("b_count"),
         sum(col("b_amount")).as("b_cur"),
         sum(col("profit_amount")).as("p_cur"),
         safeDiv(sum(col("profit_amount")), sum(col("b_amount"))).as("rtp_cur"))
-      .withColumn("summary_date", lit(d))
+      .withColumn("summary_date", lit(slice.dateInt))
       .na.fill(0.0)
 
     // Ordered masks: base rule sets both flags, unconditional override wins.
@@ -285,7 +252,7 @@ object RiskCtrl {
   def rtpLedgerMerge(old: DataFrame, snapshot: DataFrame, now: java.sql.Timestamp,
       cfg: RtpConfig = RtpConfig()): DataFrame = {
     val epoch = lit("1970-01-01 00:00:00").cast("timestamp")
-    val nowLit = lit(now.toLocalDateTime.toString.replace('T', ' ')).cast("timestamp")
+    val nowLit = tsLit(now)
 
     if (old.isEmpty) {
       return snapshot

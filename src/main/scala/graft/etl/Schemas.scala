@@ -95,7 +95,30 @@ case class TaskSlice(
     freq_type: String = "5min",
     level: Int = 100,
     gte_time: java.sql.Timestamp = java.sql.Timestamp.valueOf("1970-01-01 00:00:00"),
-    lt_time: java.sql.Timestamp = java.sql.Timestamp.valueOf("1970-01-01 00:00:00"))
+    lt_time: java.sql.Timestamp = java.sql.Timestamp.valueOf("1970-01-01 00:00:00")) {
+  // Derived literals are defs, not fields: the Dataset[TaskSlice] encoder
+  // stays the board's nine columns.
+
+  /** The half-open bounds as the strings `Cols.inWindow` compares against. */
+  def gteStr: String = graft.ops.Cols.tsString(gte_time)
+  def ltStr: String = graft.ops.Cols.tsString(lt_time)
+
+  /** The calendar day of the slice start. */
+  def day: java.time.LocalDate = gte_time.toLocalDateTime.toLocalDate
+
+  /** yyyymmdd of the first and of the last day the slice covers. */
+  def dateInt: Int = graft.ops.Cols.dateInt(day)
+  def lastDateInt: Int = graft.ops.Cols.dateInt(lt_time.toLocalDateTime.minusNanos(1).toLocalDate)
+
+  /** P1: the slice's ALL-wildcard filters on platform, site_code and, with
+    * `withGame`, game_code (trans_summary_5min.py:56-65). */
+  def scope(withGame: Boolean): org.apache.spark.sql.Column = {
+    import graft.ops.Cols.eqOrAll
+    import org.apache.spark.sql.functions.col
+    val base = eqOrAll(col("platform"), platform) && eqOrAll(col("site_code"), site_code)
+    if (withGame) base && eqOrAll(col("game_code"), game_code) else base
+  }
+}
 
 /** Risk thresholds — mirrors report_config.py risk_ctrl_1d_config +
   * player_summary_rtp_config verbatim. */

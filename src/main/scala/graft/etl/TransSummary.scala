@@ -15,45 +15,48 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each tier groups on (platform, site_code, player_name, country) —
   * the same keys throughout — so the cascade's shuffles co-partition; filters
-  * on summary_date/hours hit the sink's partition layout (partition pruning).
+  * on summary_date hit the sink's partition layout (partition pruning).
   */
 object TransSummary {
 
   val keys = Seq("platform", "site_code", "player_name", "country")
 
-  private val metricSums = Seq(
+  /** The measure columns every tier carries; coarser tiers sum them. */
+  private val measures = Seq(
     "trans_in_amount", "trans_out_amount", "trans_in_count", "trans_out_count",
     "trans_out_lost_amount")
 
-  /** A1 battery over one slice of player_value_log. `slice` carries the
-    * half-open window and ALL-wildcard filters (P1/P2/P3/P4). */
-  def fiveMin(valueLog: DataFrame, slice: TaskSlice): DataFrame = {
-    val gte = slice.gte_time.toLocalDateTime.toString.replace('T', ' ')
-    val lt = slice.lt_time.toLocalDateTime.toString.replace('T', ' ')
-    val gteTs = slice.gte_time.toLocalDateTime
+  private val in = col("trade_type") === "IN"
+  private val out = col("trade_type") === "OUT"
 
-    valueLog
-      // P3: redundant int partition-key predicate (trade_date = yyyymmdd of
-      // the slice) — in Spark this prunes parquet partitions before the scan.
-      .filter(col("trade_date") === lit(gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt))
-      .filter(col("trade_status") === "SUCCESS")
-      .filter(inWindow(col("trade_time"), gte, lt))
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .groupBy(keys.map(col): _*)
+  /** The A1 battery over the SUCCESS transfers of `valueLog`, grouped by the
+    * keys and `bucket` (an aliased 5-min slice column). `prepare` runs between
+    * the SUCCESS filter and the grouping: the stream declares its watermark
+    * there. */
+  private[graft] def aggregate(valueLog: DataFrame, bucket: Column,
+      prepare: DataFrame => DataFrame = identity): DataFrame =
+    prepare(valueLog.filter(col("trade_status") === "SUCCESS"))
+      .groupBy(keys.map(col) :+ bucket: _*)
       .agg(
-        sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
-        sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
-        sum(when(col("trade_type") === "IN", 1L).otherwise(0L)).as("trans_in_count"),
-        sum(when(col("trade_type") === "OUT", 1L).otherwise(0L)).as("trans_out_count"),
-        (sumIf(col("trade_type") === "OUT", col("before_value"))
-          - sumIf(col("trade_type") === "OUT", col("after_value"))
-          - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
-      .withColumn("summary_date", lit(gteTs.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt))
-      .withColumn("hours", lit(gteTs.getHour))
-      .withColumn("mins", lit(gteTs.getMinute))
-      .withColumn("start_time", lit(gte).cast("timestamp"))
-  }
+        sumIf(in, col("value")).as("trans_in_amount"),
+        sumIf(out, col("value")).as("trans_out_amount"),
+        countIf(in).as("trans_in_count"),
+        countIf(out).as("trans_out_count"),
+        (sumIf(out, col("before_value")) - sumIf(out, col("after_value"))
+          - sumIf(out, col("value"))).as("trans_out_lost_amount"))
+
+  /** A1 over one slice of player_value_log. `slice` carries the half-open
+    * window and ALL-wildcard filters (P1/P2/P3/P4); every row is stamped
+    * with the slice start. */
+  def fiveMin(valueLog: DataFrame, slice: TaskSlice): DataFrame =
+    Tiers.stamp(aggregate(
+      valueLog
+        // P3: redundant int partition-key predicate (trade_date = yyyymmdd of
+        // the slice) — in Spark this prunes parquet partitions before the scan.
+        .filter(col("trade_date") === slice.dateInt)
+        .filter(inWindow(col("trade_time"), slice.gteStr, slice.ltStr))
+        .filter(slice.scope(withGame = false)),
+      lit(slice.gteStr).cast("timestamp").as("start_time")), "5min")
 
   /** Backfill/catch-up path: ALL 5-min slices inside `[gte, lt)` in ONE
     * aggregation, grouping by the floored event time instead of running one
@@ -61,67 +64,15 @@ object TransSummary {
     * trans_summary_5min.py:23). Output is identical to per-slice [[fiveMin]]
     * for aligned slices — the slice stamp IS the 5-min floor of trade_time.
     * At scale this is one shuffle over the day instead of 288 scheduled jobs. */
-  def fiveMinRange(valueLog: DataFrame, gte: String, lt: String): DataFrame = {
-    val slice = graft.time.Slicer.floorTo(col("trade_time").cast("timestamp"), "5min")
-    valueLog
-      .filter(col("trade_status") === "SUCCESS")
-      .filter(inWindow(col("trade_time"), gte, lt))
-      .groupBy((keys.map(col) :+ slice.as("start_time")): _*)
-      .agg(
-        sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
-        sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
-        sum(when(col("trade_type") === "IN", 1L).otherwise(0L)).as("trans_in_count"),
-        sum(when(col("trade_type") === "OUT", 1L).otherwise(0L)).as("trans_out_count"),
-        (sumIf(col("trade_type") === "OUT", col("before_value"))
-          - sumIf(col("trade_type") === "OUT", col("after_value"))
-          - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
-      .withColumn("summary_date", graft.ops.Cols.yyyymmdd(col("start_time")))
-      .withColumn("hours", hour(col("start_time")))
-      .withColumn("mins", minute(col("start_time")))
-  }
+  def fiveMinRange(valueLog: DataFrame, gte: String, lt: String): DataFrame =
+    Tiers.stamp(aggregate(
+      valueLog.filter(inWindow(col("trade_time"), gte, lt)),
+      graft.time.Slicer.floorTo(col("trade_time").cast("timestamp"), "5min").as("start_time")),
+      "5min")
 
-  /** A4: one rollup step — re-aggregate the previous tier for one slice.
-    * 1h consumes 5min rows of its hour; 1d consumes 1h rows of its day;
-    * 1m consumes 1d rows of its month. */
-  private def rollup(prev: DataFrame, slice: TaskSlice, sliceFilter: Column,
-      stamp: DataFrame => DataFrame): DataFrame = {
-    val rolled = prev
-      .filter(sliceFilter)
-      .filter(eqOrAll(col("platform"), slice.platform))
-      .filter(eqOrAll(col("site_code"), slice.site_code))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col(metricSums.head)).as(metricSums.head),
-        metricSums.tail.map(c => sum(col(c)).as(c)): _*)
-    stamp(rolled)
-  }
-
-  def oneHour(fiveMinTier: DataFrame, slice: TaskSlice): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val dateInt = g.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-    rollup(fiveMinTier, slice,
-      col("summary_date") === dateInt && col("hours") === g.getHour,
-      _.withColumn("summary_date", lit(dateInt))
-        .withColumn("hours", lit(g.getHour))
-        .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp")))
-  }
-
-  def oneDay(oneHourTier: DataFrame, slice: TaskSlice): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val dateInt = g.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
-    rollup(oneHourTier, slice,
-      col("summary_date") === dateInt,
-      _.withColumn("summary_date", lit(dateInt))
-        .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp")))
-  }
-
-  /** 1m groups days whose yyyymmdd falls inside the month (trans_summary_1m
-    * reads the 1d tier for summary_date in [month_start, next_month)). */
-  def oneMonth(oneDayTier: DataFrame, slice: TaskSlice): DataFrame = {
-    val g = slice.gte_time.toLocalDateTime
-    val monthInt = g.getYear * 100 + g.getMonthValue
-    rollup(oneDayTier, slice,
-      col("summary_date") >= monthInt * 100 && col("summary_date") < (monthInt + 1) * 100,
-      _.withColumn("summary_month", lit(monthInt))
-        .withColumn("start_time", lit(g.toString.replace('T', ' ')).cast("timestamp")))
-  }
+  /** A4: the `freq` tier ("1H", "1D" or "1M") of every bucket inside
+    * `window`, re-aggregated from the finer tier `prev` — 1h from 5min rows,
+    * 1d from 1h rows, 1m from 1d rows. */
+  def rollup(prev: DataFrame, freq: String, window: TaskSlice): DataFrame =
+    Tiers.rollup(prev, freq, window, keys, measures.map(c => sum(col(c)).as(c)))
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.functions.VectorFunctions.{cosine_sim, dot_product}
+import graft.functions.VectorFunctions.cosine_sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -119,21 +119,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cosine", "rank")
   }
-
-  /** Deterministic hyperplanes for one LSH table (seeded per table; no RNG
-    * state crosses executors — the planes are literals in the plan). */
-  def planes(table: Int, bits: Int, dim: Int): Seq[Seq[Float]] = {
-    val rng = new scala.util.Random(0xC0FFEEL + table * 7919L)
-    Seq.fill(bits)(Seq.fill(dim)((rng.nextDouble() * 2 - 1).toFloat))
-  }
-
-  /** Random-hyperplane signature for one LSH table: `bits` sign bits packed
-    * into a long. Each bit is a codegen'd DotProduct against a literal
-    * plane — no interpreted lambdas in the inner loop. */
-  def hyperplaneSignature(vec: Column, table: Int, bits: Int = 16, dim: Int = 64): Column =
-    planes(table, bits, dim).zipWithIndex.map { case (p, i) =>
-      when(dot_product(vec, typedlit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** ANN top-k via multi-table hyperplane LSH: rows sharing a signature in
     * any table are candidates; candidates are re-scored exactly and top-k'd.

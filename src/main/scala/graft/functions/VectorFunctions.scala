@@ -123,9 +123,8 @@ case class DotProduct(left: Expression, right: Expression)
   * the plan — analysis/optimization of that plan costs seconds per query
   * (it dominated the LSH queries' wall time), and the literal planes are
   * re-shipped with every plan. Here the planes are derived deterministically
-  * from the seed INSIDE the expression (same stream as Similarity.planes, so
-  * signatures are bit-identical to the composed form), the plan holds one
-  * node, and the scoring loop runs over primitive arrays.
+  * from the seed INSIDE the expression, the plan holds one node, and the
+  * scoring loop runs over primitive arrays.
   *
   * CodegenFallback like the hash kernels: the loop body is compiled Scala;
   * surrounding operators still whole-stage-codegen.
@@ -137,8 +136,8 @@ case class HyperplaneSigs(child: Expression, tables: Int, bits: Int, dim: Int)
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
 
-  // [tables][bits*dim], plane b of table t at offset b*dim — the SAME draw
-  // order as Similarity.planes (Random(0xC0FFEE + t*7919), bits×dim draws).
+  // [tables][bits*dim], plane b of table t at offset b*dim, drawn from
+  // Random(0xC0FFEE + t*7919): bits×dim uniform draws in [-1, 1).
   @transient private lazy val planes: Array[Array[Float]] =
     Array.tabulate(tables) { t =>
       val rng = new scala.util.Random(0xC0FFEEL + t * 7919L)
@@ -184,12 +183,4 @@ object VectorFunctions {
   /** Column API: all LSH table signatures (array<long>) for a vector. */
   def hyperplane_sigs(vec: Column, tables: Int, bits: Int, dim: Int): Column =
     GraftExpressionBridge.column(HyperplaneSigs(GraftExpressionBridge.expression(vec), tables, bits, dim))
-
-  /** Register for SQL use (`SELECT cosine_sim(a, b) ...`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
-  }
 }

@@ -186,12 +186,6 @@ object Sinks {
     * predicate (player_ranking…py:77-88). */
   def exists(df: DataFrame): Boolean = !df.limit(1).isEmpty
 
-  /** S7: debug artifact sink — replaces the reference's stray
-    * `to_excel('all_new_df.xlsx')` (risk_ctrl_rtp_1d.py:160) with a
-    * header'd CSV dump. */
-  def debugCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
   /** Read a report table back (empty-safe: a table that was never written
     * yet reads as an empty DataFrame with the given schema). */
   def readOrEmpty(spark: SparkSession, path: String, schema: org.apache.spark.sql.types.StructType): DataFrame =

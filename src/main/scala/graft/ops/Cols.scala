@@ -50,6 +50,17 @@ object Cols {
   /** F2: int-encoded month `yyyymm` (trans_summary_1m.py:91). */
   def yyyymm(ts: Column): Column = date_format(ts, "yyyyMM").cast("int")
 
+  /** F2 on the driver: the `yyyymmdd` int of a calendar day. */
+  def dateInt(day: java.time.LocalDate): Int =
+    day.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toInt
+
+  /** A timestamp as the local `yyyy-MM-dd HH:mm[:ss]` string that
+    * [[inWindow]] compares against and [[tsLit]] casts back. */
+  def tsString(t: java.sql.Timestamp): String = t.toLocalDateTime.toString.replace('T', ' ')
+
+  /** A timestamp literal read in the session time zone. */
+  def tsLit(t: java.sql.Timestamp): Column = lit(tsString(t)).cast("timestamp")
+
   /** yyyymmdd int -> yyyymm int without going back through a timestamp. */
   def monthOfDateInt(dateInt: Column): Column = (dateInt / 100).cast("int")
 

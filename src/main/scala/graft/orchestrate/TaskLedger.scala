@@ -66,7 +66,7 @@ object TaskLedger {
     * raw now for 5min — the slicer only emits whole slices anyway), then
     * explode into publishable slices. `now` is injected (SURVEY §7.4.4). */
   def newTasks(watermarks: DataFrame, now: java.sql.Timestamp): DataFrame = {
-    val nowLit = lit(now.toLocalDateTime.toString.replace('T', ' ')).cast("timestamp")
+    val nowLit = tsLit(now)
     val ranged = watermarks
       .withColumn("gte_time", col("lt_time"))
       .withColumn("lt_time",
@@ -207,7 +207,7 @@ object TaskLedger {
   /** S9 set-based status update: mark the given slices done with runtime
     * accounting (ExecUtils.py:56-84's per-row UPDATE loop as one join). */
   def markDone(board: DataFrame, completed: DataFrame, now: java.sql.Timestamp): DataFrame = {
-    val nowLit = lit(now.toLocalDateTime.toString.replace('T', ' ')).cast("timestamp")
+    val nowLit = tsLit(now)
     val hit = completed
       .select(taskKeys.map(col) :+ col("freq_type") :+ col("gte_time") :+ col("lt_time"): _*)
       .withColumn("_hit", lit(1))

@@ -180,8 +180,6 @@ object FixtureQueries {
   // Two chained aggs; the second groups by a prefix of the first's keys so
   // the day tier's shuffle partitioning is reusable.
   // ---------------------------------------------------------------------------
-  private val wmaDay = "2024-01-15"
-
   def q6Wma(spark: SparkSession, dir: String): DataFrame = {
     // Population stddev via the sum-of-squares identity over EXACT decimal
     // day sums: sum(ds) and sum(ds²) are order-independent decimals, and the

@@ -252,28 +252,20 @@ object ReportQueries {
        |GROUP BY 1, 2, 3, 4, summary_date, hours, mins""".stripMargin
 
   // ---------------------------------------------------------------------------
-  // r4: the full monthly rollup chain — 5min backfill -> day tier -> 1m via
-  // TransSummary.oneMonth — against the direct month aggregation oracle.
-  // Proves the whole-cascade identity (each tier only ever reads the tier
-  // below) through the driver gate, not just in unit tests.
+  // r4: the full monthly rollup chain — 5min backfill -> 1d -> 1m, each tier
+  // via TransSummary.rollup over the tier below — against the direct month
+  // aggregation oracle. Proves the whole-cascade identity (each tier only
+  // ever reads the tier below) through the driver gate, not just in unit tests.
   // ---------------------------------------------------------------------------
   def r4TransMonthly(spark: SparkSession, dir: String): DataFrame = {
+    val month = TaskSlice(freq_type = "1M",
+      gte_time = java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
+      lt_time = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
     val fiveMin = TransSummary.fiveMinRange(
       valueLog(spark, dir, Some(("2024-01-01 00:00:00", "2024-02-01 00:00:00"))),
-      "2024-01-01 00:00:00", "2024-02-01 00:00:00")
-    // materialized-1d-tier equivalent: re-aggregate the 5min tier to day grain
-    val dayTier = fiveMin.groupBy(
-      col("platform"), col("site_code"), col("player_name"), col("country"), col("summary_date"))
-      .agg(
-        sum(col("trans_in_amount")).as("trans_in_amount"),
-        sum(col("trans_out_amount")).as("trans_out_amount"),
-        sum(col("trans_in_count")).as("trans_in_count"),
-        sum(col("trans_out_count")).as("trans_out_count"),
-        sum(col("trans_out_lost_amount")).as("trans_out_lost_amount"))
-    transOut(TransSummary.oneMonth(dayTier, TaskSlice(freq_type = "1M",
-      gte_time = java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
-      lt_time = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")))
-      .drop("start_time"))
+      month.gteStr, month.ltStr)
+    val dayTier = TransSummary.rollup(fiveMin, "1D", month)
+    transOut(TransSummary.rollup(dayTier, "1M", month).drop("start_time"))
   }
 
   private val r4Sql =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Cols._
+import graft.etl.{Tiers, TransSummary}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -23,36 +23,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingSummary {
 
-  /** The trans_summary 5-min tier as a streaming aggregation. Input: a
-    * STREAMING DataFrame shaped like player_value_log. Event time is
+  /** The trans_summary 5-min tier as a streaming aggregation: the batch
+    * tier's A1 battery and stamps, bucketed by a 5-minute event-time window.
+    * Input: a STREAMING DataFrame shaped like player_value_log. Event time is
     * trade_time; late rows beyond the watermark are dropped (the batch
     * system's equivalent is the manual rerun cascade). */
   def transFiveMinStream(valueLog: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    valueLog
-      .filter(col("trade_status") === "SUCCESS")
-      .withColumn("trade_time", col("trade_time").cast("timestamp"))
-      // empty watermark = the caller already declared one upstream (e.g. a
-      // dedup stage); redefining it on the same column is disallowed
-      .transform(d => if (watermark.isEmpty) d else d.withWatermark("trade_time", watermark))
-      .groupBy(
-        window(col("trade_time"), "5 minutes").as("slice"),
-        col("platform"), col("site_code"), col("player_name"), col("country"))
-      .agg(
-        sumIf(col("trade_type") === "IN", col("value")).as("trans_in_amount"),
-        sumIf(col("trade_type") === "OUT", col("value")).as("trans_out_amount"),
-        countIf(col("trade_type") === "IN").as("trans_in_count"),
-        countIf(col("trade_type") === "OUT").as("trans_out_count"),
-        (sumIf(col("trade_type") === "OUT", col("before_value"))
-          - sumIf(col("trade_type") === "OUT", col("after_value"))
-          - sumIf(col("trade_type") === "OUT", col("value"))).as("trans_out_lost_amount"))
-      .select(
-        col("slice.start").as("start_time"),
-        yyyymmdd(col("slice.start")).as("summary_date"),
-        hour(col("slice.start")).as("hours"),
-        minute(col("slice.start")).as("mins"),
-        col("platform"), col("site_code"), col("player_name"), col("country"),
-        col("trans_in_amount"), col("trans_out_amount"),
-        col("trans_in_count"), col("trans_out_count"), col("trans_out_lost_amount"))
+    TransSummary.aggregate(valueLog, window(col("trade_time"), "5 minutes").as("slice"),
+      _.withColumn("trade_time", col("trade_time").cast("timestamp"))
+        // empty watermark = the caller already declared one upstream (e.g. a
+        // dedup stage); redefining it on the same column is disallowed
+        .transform(d => if (watermark.isEmpty) d else d.withWatermark("trade_time", watermark)))
+      .withColumn("start_time", col("slice.start"))
+      .drop("slice")
+      .transform(Tiers.stamp(_, "5min"))
 
   /** Start the streaming 5-min tier writing into the report table via
     * foreachBatch + KEY-level upsert — the streaming equivalent of the

@@ -21,9 +21,9 @@ class CascadeSpec extends AnyFunSuite {
 
 
   /** Drive the real cascade over the first `hours` hours of a day: slicer ->
-    * per-slice fiveMin -> per-hour oneHour -> oneDay, exactly as the executor
-    * would per task slice. (Bounded hours keep the unioned test plan small;
-    * production materializes each tier to parquet between steps.) */
+    * per-slice fiveMin -> 1h rollup of those hours -> 1d rollup. (Bounded
+    * hours keep the unioned test plan small; production materializes each
+    * tier to parquet between steps.) */
   private def runTier(day: String, hours: Int): (DataFrame, DataFrame, DataFrame) = {
     val d0 = java.time.LocalDate.parse(day).atStartOfDay()
     val slices = Slicer.explodeSlices(
@@ -36,12 +36,10 @@ class CascadeSpec extends AnyFunSuite {
         lt_time = r.getAs[java.sql.Timestamp]("lt_time")))
     }.reduce(_ unionByName _)
 
-    val oneHour = (0 until hours).map { h =>
-      TransSummary.oneHour(fiveMin, TaskSlice(freq_type = "1H",
-        gte_time = ts(d0.plusHours(h)), lt_time = ts(d0.plusHours(h + 1))))
-    }.reduce(_ unionByName _)
+    val oneHour = TransSummary.rollup(fiveMin, "1H", TaskSlice(freq_type = "1H",
+      gte_time = ts(d0), lt_time = ts(d0.plusHours(hours))))
 
-    val oneDay = TransSummary.oneDay(oneHour, TaskSlice(freq_type = "1D",
+    val oneDay = TransSummary.rollup(oneHour, "1D", TaskSlice(freq_type = "1D",
       gte_time = ts(d0), lt_time = ts(d0.plusDays(1))))
     (fiveMin, oneHour, oneDay)
   }
@@ -107,7 +105,8 @@ class CascadeSpec extends AnyFunSuite {
       f"2024-01-01 10:${i * 5}%02d:00",
       if (i == 11) "2024-01-01 11:00:00" else f"2024-01-01 10:${i * 5 + 5}%02d:00"))
     val fiveMin = s5.map(PlayerSummary.fiveMin(plog, sites, _)).reduce(_ unionByName _)
-    val hour = PlayerSummary.oneHour(fiveMin, TestData.slice("2024-01-01 10:00:00", "2024-01-01 11:00:00", "1H"))
+    val hour = PlayerSummary.rollup(fiveMin, "1H",
+      TestData.slice("2024-01-01 10:00:00", "2024-01-01 11:00:00", "1H"))
     val direct = PlayerSummary.fiveMin(plog, sites, TestData.slice("2024-01-01 10:00:00", "2024-01-01 11:00:00", "1H"))
     val k = PlayerSummary.keys
     val bad = hour.alias("h").join(direct.alias("d"), k)

@@ -150,18 +150,16 @@ class RiskCtrlSpec extends AnyFunSuite {
     val vlog = TestData.valueLog(spark)
     val sites = TestData.gameSites(spark)
     val days = (1 to 9).map(d => f"2024-01-$d%02d")
-    val ps1h = days.map(d => PlayerSummary.oneHour(
+    val ps1h = days.map(d => PlayerSummary.rollup(
       PlayerSummary.fiveMin(plog, sites, TestData.slice(s"$d 00:00:00", s"$d 01:00:00")),
-      TestData.slice(s"$d 00:00:00", s"$d 01:00:00", "1H"))).reduce(_ unionByName _).cache()
-    val ps1d = days.map(d => PlayerSummary.oneDay(
-      ps1h.filter(col("summary_date") === d.replace("-", "").toInt),
-      TestData.slice(s"$d 00:00:00", s"$d 01:00:00", "1D"))).reduce(_ unionByName _).cache()
-    val ts1h = days.map(d => TransSummary.oneHour(
+      "1H", TestData.slice(s"$d 00:00:00", s"$d 01:00:00", "1H"))).reduce(_ unionByName _).cache()
+    val ps1d = PlayerSummary.rollup(ps1h, "1D",
+      TestData.slice(s"${days.head} 00:00:00", "2024-01-10 00:00:00", "1D")).cache()
+    val ts1h = days.map(d => TransSummary.rollup(
       TransSummary.fiveMin(vlog, TestData.slice(s"$d 00:00:00", s"$d 01:00:00")),
-      TestData.slice(s"$d 00:00:00", s"$d 01:00:00", "1H"))).reduce(_ unionByName _).cache()
-    val ts1d = days.map(d => TransSummary.oneDay(
-      ts1h.filter(col("summary_date") === d.replace("-", "").toInt),
-      TestData.slice(s"$d 00:00:00", s"$d 01:00:00", "1D"))).reduce(_ unionByName _).cache()
+      "1H", TestData.slice(s"$d 00:00:00", s"$d 01:00:00", "1H"))).reduce(_ unionByName _).cache()
+    val ts1d = TransSummary.rollup(ts1h, "1D",
+      TestData.slice(s"${days.head} 00:00:00", "2024-01-10 00:00:00", "1D")).cache()
 
     val slice = TestData.slice("2024-01-09 00:00:00", "2024-01-10 00:00:00", "1D")
     val report = RiskCtrl.playerOneDay(ps1h, ts1h, ps1d, ts1d, slice).cache()

@@ -3,6 +3,8 @@ package graft.etl
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
+import org.scalatest.Assertions._
 
 /** Reference-shaped inputs derived deterministically from the driver fixtures
   * (FIXTURES.md §C binding) — events become player_value_log /
@@ -61,4 +63,29 @@ object TestData {
     TaskSlice(platform = platform, site_code = site, game_code = game,
       freq_type = freq,
       gte_time = java.sql.Timestamp.valueOf(gte), lt_time = java.sql.Timestamp.valueOf(lt))
+
+  /** `got` equals `want` column for column: the same columns and types, rows
+    * matched on every non-double column (keys, counts, stamps: exact), and
+    * doubles within `tol` relative. */
+  def assertSameTable(name: String, got: DataFrame, want: DataFrame, tol: Double = 1e-9): Unit = {
+    val cols = want.columns.sorted.toSeq
+    assert(got.columns.sorted.toSeq === cols, s"$name columns")
+    cols.foreach(c => assert(got.schema(c).dataType === want.schema(c).dataType, s"$name.$c type"))
+    val (doubles, exact) = cols.partition(c => want.schema(c).dataType == DoubleType)
+    def rows(df: DataFrame): Map[Seq[Any], Seq[Any]] = {
+      val rs = df.select((exact ++ doubles).map(col): _*).collect().toSeq
+        .map(r => r.toSeq.take(exact.size) -> r.toSeq.drop(exact.size))
+      assert(rs.map(_._1).distinct.size === rs.size, s"$name has duplicate rows")
+      rs.toMap
+    }
+    val (g, w) = (rows(got), rows(want))
+    assert(w.nonEmpty, s"$name is empty")
+    assert(g.keySet === w.keySet, s"$name rows")
+    for ((k, wv) <- w; ((gd, wd), c) <- g(k).zip(wv).zip(doubles)) (gd, wd) match {
+      case (a: Double, b: Double) =>
+        assert(math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b))),
+          s"$name.$c at $k: $a vs $b")
+      case _ => assert(gd === wd, s"$name.$c at $k")
+    }
+  }
 }

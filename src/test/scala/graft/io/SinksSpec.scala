@@ -1,7 +1,9 @@
 package graft.io
 
 import graft.SparkTestSession
-import graft.etl.{TaskSlice, TestData, TransSummary}
+import graft.etl.{PlayerSummary, TaskSlice, TestData, TransSummary}
+import graft.etl.TestData.assertSameTable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,22 +14,27 @@ class SinksSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   lazy val vlog = TestData.valueLog(spark).cache()
+  lazy val plog = TestData.profitLog(spark).cache()
+  lazy val sites = TestData.gameSites(spark)
+
+  /** The 24 aligned 5-min slices of 2024-01-02 00:00-02:00, run one by one
+    * through `fiveMin` and unioned. */
+  private def perSlice(fiveMin: TaskSlice => DataFrame): DataFrame = (0 until 24).map { i =>
+    val g = java.time.LocalDateTime.of(2024, 1, 2, i / 12, (i % 12) * 5)
+    fiveMin(TaskSlice(freq_type = "5min", gte_time = java.sql.Timestamp.valueOf(g),
+      lt_time = java.sql.Timestamp.valueOf(g.plusMinutes(5))))
+  }.reduce(_ unionByName _)
 
   test("fiveMinRange (one-pass backfill) equals per-slice fiveMin execution") {
-    val range = TransSummary.fiveMinRange(vlog, "2024-01-02 00:00:00", "2024-01-02 02:00:00")
-    val slices = (0 until 24).map { i =>
-      val g = java.time.LocalDateTime.of(2024, 1, 2, i / 12, (i % 12) * 5)
-      TransSummary.fiveMin(vlog, TaskSlice(freq_type = "5min",
-        gte_time = java.sql.Timestamp.valueOf(g),
-        lt_time = java.sql.Timestamp.valueOf(g.plusMinutes(5))))
-    }.reduce(_ unionByName _)
-    val keys = Seq("platform", "site_code", "player_name", "country", "summary_date", "hours", "mins")
-    val joined = range.alias("r").join(slices.alias("s"), keys, "full_outer")
-      .filter(
-        abs(coalesce(col("r.trans_in_amount"), lit(0.0)) - coalesce(col("s.trans_in_amount"), lit(0.0))) > 1e-9 ||
-        coalesce(col("r.trans_in_count"), lit(-1L)) =!= coalesce(col("s.trans_in_count"), lit(-1L)))
-    assert(joined.isEmpty, "backfill path diverged from per-slice path")
-    assert(range.count() === slices.count())
+    assertSameTable("trans_summary_5min",
+      TransSummary.fiveMinRange(vlog, "2024-01-02 00:00:00", "2024-01-02 02:00:00"),
+      perSlice(TransSummary.fiveMin(vlog, _)))
+  }
+
+  test("player fiveMinRange (one-pass backfill) equals per-slice fiveMin execution") {
+    assertSameTable("player_summary_5min",
+      PlayerSummary.fiveMinRange(plog, sites, "2024-01-02 00:00:00", "2024-01-02 02:00:00"),
+      perSlice(PlayerSummary.fiveMin(plog, sites, _)))
   }
 
   test("dynamic partition overwrite: re-running a slice is idempotent and " +

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.etl.TestData
+import graft.etl.{TestData, TransSummary}
+import graft.etl.TestData.assertSameTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,18 +28,9 @@ class StreamingSpec extends AnyFunSuite {
       .start()
     q.awaitTermination(120000)
 
-    val got = spark.table("stream_5min")
-      .groupBy("platform", "site_code", "player_name", "country")
-      .agg(sum("trans_in_amount").as("in_amt"), sum("trans_in_count").as("in_cnt"))
-    val want = vlog.filter(col("trade_status") === "SUCCESS")
-      .groupBy("platform", "site_code", "player_name", "country")
-      .agg(
-        sum(when(col("trade_type") === "IN", col("value")).otherwise(0.0)).as("w_amt"),
-        count(when(col("trade_type") === "IN", 1)).as("w_cnt"))
-    val bad = got.join(want, Seq("platform", "site_code", "player_name", "country"), "full_outer")
-      .filter(abs(coalesce(col("in_amt"), lit(0.0)) - coalesce(col("w_amt"), lit(0.0))) > 1e-6 ||
-        coalesce(col("in_cnt"), lit(0L)) =!= coalesce(col("w_cnt"), lit(0L)))
-    assert(bad.isEmpty, "streaming aggregation diverged from batch")
+    // every measure and stamp, per (keys, start_time)
+    assertSameTable("stream_5min", spark.table("stream_5min"),
+      TransSummary.fiveMinRange(vlog, "1970-01-01 00:00:00", "2100-01-01 00:00:00"))
     assert(spark.table("stream_5min").count() > 0)
   }
 
