@@ -15,8 +15,17 @@ import org.apache.spark.sql.functions._
   * different schedule (or cluster) than the 5min tier.
   *
   * Execution model per day: the 5min tier uses the one-pass backfill
-  * aggregation; coarser tiers aggregate the materialized tier below. All
-  * tiers partition on summary_date.
+  * aggregation; coarser tiers aggregate the materialized tier below, so each
+  * cascade's 5min -> 1h -> 1d chain stays serial through the sink. All tiers
+  * partition on summary_date. The four report tables of a day and the two
+  * month rollups each read only tiers that are already materialized and
+  * write a table no other of them reads, so `runReportsDay` and `runMonth`
+  * write theirs concurrently and return once every write is done: at this
+  * scale fixed per-job overhead, not data, sets the time, and overlapping
+  * independent jobs fills the cores one job leaves idle. The writer threads
+  * are created per call, so each inherits the caller's Spark local
+  * properties (job group, tags) and none carries a stale SQL execution id
+  * from an earlier use.
   */
 object Pipeline {
 
@@ -41,6 +50,24 @@ object Pipeline {
   private def write(df: DataFrame, path: String): Unit =
     Sinks.overwriteSlices(df, path, Seq("summary_date"))
 
+  /** Runs every write on a thread of its own, waits for all of them, then
+    * rethrows the first failure (in argument order; later ones ride along as
+    * suppressed). Each write builds its frame on its thread, so a branch that
+    * fails at analysis never stops the others. */
+  private def concurrently(writes: (() => Unit)*): Unit = {
+    val failures = Array.fill[Option[Throwable]](writes.size)(None)
+    val threads = writes.zipWithIndex.map { case (w, i) =>
+      new Thread(() => try w() catch { case e: Throwable => failures(i) = Some(e) },
+        s"graft-pipeline-write-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    failures.flatten.toList match {
+      case first :: rest => rest.foreach(first.addSuppressed); throw first
+      case Nil =>
+    }
+  }
+
   /** One day of a cascade: the 5min tier in one pass over the raw log, then
     * the day's whole 1h tier in one aggregation over the 5min tier it wrote,
     * then the 1d tier over the 1h tier. */
@@ -48,9 +75,15 @@ object Pipeline {
       fiveMin: TaskSlice => DataFrame, rollup: (DataFrame, String, TaskSlice) => DataFrame,
       fiveMinPath: String, hourPath: String, dayPath: String): Unit = {
     val slice = daySlice(day)
-    write(fiveMin(slice), fiveMinPath)
-    write(rollup(spark.read.parquet(fiveMinPath), "1H", slice), hourPath)
-    write(rollup(spark.read.parquet(hourPath), "1D", slice), dayPath)
+    // each tier is read back with the schema of the frame just written, which
+    // skips the parquet footer-inference job of a schema-less read
+    def writeAndReread(df: DataFrame, path: String): DataFrame = {
+      write(df, path)
+      spark.read.schema(df.schema).parquet(path)
+    }
+    val fiveMinTier = writeAndReread(fiveMin(slice), fiveMinPath)
+    val hourTier = writeAndReread(rollup(fiveMinTier, "1H", slice), hourPath)
+    write(rollup(hourTier, "1D", slice), dayPath)
   }
 
   /** Run one day of the trans_summary cascade end-to-end. */
@@ -71,13 +104,15 @@ object Pipeline {
   def runMonth(spark: SparkSession, paths: Paths, month: java.time.YearMonth): Unit = {
     val slice = TaskSlice(freq_type = "1M", gte_time = ts(month.atDay(1).atStartOfDay()),
       lt_time = ts(month.plusMonths(1).atDay(1).atStartOfDay()))
-    Sinks.overwriteSlices(TransSummary.rollup(spark.read.parquet(paths.trans1d), "1M", slice),
-      s"${paths.base}/trans_summary_1m", Seq("summary_month"))
-    Sinks.overwriteSlices(PlayerSummary.rollup(spark.read.parquet(paths.player1d), "1M", slice),
-      s"${paths.base}/player_summary_1m", Seq("summary_month"))
+    concurrently(
+      () => Sinks.overwriteSlices(TransSummary.rollup(spark.read.parquet(paths.trans1d), "1M", slice),
+        s"${paths.base}/trans_summary_1m", Seq("summary_month")),
+      () => Sinks.overwriteSlices(PlayerSummary.rollup(spark.read.parquet(paths.player1d), "1M", slice),
+        s"${paths.base}/player_summary_1m", Seq("summary_month")))
   }
 
-  /** Risk + registration reports for one day (consume the materialized tiers). */
+  /** Risk + registration reports for one day (consume the materialized
+    * tiers), the four tables written concurrently. */
   def runReportsDay(spark: SparkSession, players: DataFrame, paths: Paths,
       day: java.time.LocalDate, now: java.sql.Timestamp): Unit = {
     val slice = daySlice(day)
@@ -85,27 +120,30 @@ object Pipeline {
     val ps1d = spark.read.parquet(paths.player1d)
     val ts1h = spark.read.parquet(paths.trans1h)
     val ts1d = spark.read.parquet(paths.trans1d)
-
-    write(RiskCtrl.playerOneDay(ps1h, ts1h, ps1d, ts1d, slice), paths.riskPlayer1d)
-    write(RiskCtrl.gameOneDay(ps1h, ps1d, slice), paths.riskGame1d)
-
-    val snapshot = RiskCtrl.rtpSnapshot(ps1h, slice)
-    val old = Sinks.readOrEmpty(spark, paths.riskRtp1d, snapshot.schema)
-    // the ledger merge operates on THIS day's partition (the reference reads
-    // WHERE summary_date = d); first run has no ledger columns yet -> empty
-    val oldForDay =
-      if (old.columns.contains("alert_count")) old.filter(col("summary_date") === slice.dateInt)
-      else old.limit(0)
-    // The merge below dynamic-partition-overwrites the SAME path the ledger
-    // was just read from. Path-based V1 overwrites bypass Spark's
-    // cannot-overwrite-a-read-path guard, and a failed/retried write job
-    // could lose the day's alert state. localCheckpoint() materializes the
-    // old rows BEFORE the target partitions are replaced, cutting the lineage
-    // back to the files being overwritten.
-    val oldMaterialized = oldForDay.localCheckpoint()
-    write(RiskCtrl.rtpLedgerMerge(oldMaterialized, snapshot, now), paths.riskRtp1d)
-
     val ps5 = spark.read.parquet(paths.player5min)
-    write(NewRegisterSummary.oneDay(ps5, players, slice), paths.newRegister1d)
+
+    def rtpLedger(): Unit = {
+      val snapshot = RiskCtrl.rtpSnapshot(ps1h, slice)
+      val old = Sinks.readOrEmpty(spark, paths.riskRtp1d, snapshot.schema)
+      // the ledger merge operates on THIS day's partition (the reference reads
+      // WHERE summary_date = d); first run has no ledger columns yet -> empty
+      val oldForDay =
+        if (old.columns.contains("alert_count")) old.filter(col("summary_date") === slice.dateInt)
+        else old.limit(0)
+      // The merge below dynamic-partition-overwrites the SAME path the ledger
+      // was just read from. Path-based V1 overwrites bypass Spark's
+      // cannot-overwrite-a-read-path guard, and a failed/retried write job
+      // could lose the day's alert state. localCheckpoint() materializes the
+      // old rows BEFORE the target partitions are replaced, cutting the lineage
+      // back to the files being overwritten.
+      val oldMaterialized = oldForDay.localCheckpoint()
+      write(RiskCtrl.rtpLedgerMerge(oldMaterialized, snapshot, now), paths.riskRtp1d)
+    }
+
+    concurrently(
+      () => write(RiskCtrl.playerOneDay(ps1h, ts1h, ps1d, ts1d, slice), paths.riskPlayer1d),
+      () => write(RiskCtrl.gameOneDay(ps1h, ps1d, slice), paths.riskGame1d),
+      () => rtpLedger(),
+      () => write(NewRegisterSummary.oneDay(ps5, players, slice), paths.newRegister1d))
   }
 }

@@ -19,23 +19,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object Sinks {
 
   /** S4: idempotent slice overwrite (delete-before-insert). Only partitions
-    * present in `df` are replaced. */
-  def overwriteSlices(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      df.write
-        .mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+    * present in `df` are replaced. The dynamic mode is a per-write option,
+    * not the session conf, so concurrent writers never race on it and the
+    * session's own setting is left as it was. */
+  def overwriteSlices(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write
+      .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
 
   /** Key-level delete-before-insert (upsert): replace exactly the rows whose
     * `keyCols` match an incoming row, keep every other row of the touched

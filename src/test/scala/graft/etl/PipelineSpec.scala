@@ -9,7 +9,7 @@ import graft.SparkTestSession
 import graft.etl.TestData.assertSameTable
 import graft.ops.Cols.safeDiv
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `fiveMin` run slice by slice, then summed up hour -> day -> month by plain
   * group-bys in this spec, then the report operators over those tiers.
   * Counts, keys and stamps match exactly, doubles to 1e-9 relative. Every
-  * tier read of the run must prune on its summary_date partitions. */
+  * tier read of the run must prune on its summary_date partitions. The
+  * concurrently written reports are also run twice on one day (the rtp
+  * ledger merge over an existing ledger) and with one failing write, which
+  * must surface only after the other writes are done. */
 class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
 
@@ -142,16 +145,55 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assertSameTable("player_summary_1m", table("player_summary_1m"), rollPlayer(player1d, toMonth))
   }
 
+  /** The report tables besides the rtp ledger, by the report operators over
+    * the composed tiers. */
+  private lazy val otherReports: Seq[(String, DataFrame)] = Seq(
+    "risk_ctrl_player_1d" -> RiskCtrl.playerOneDay(player1h, trans1h, player1d, trans1d, daySlice),
+    "risk_ctrl_game_1d" -> RiskCtrl.gameOneDay(player1h, player1d, daySlice),
+    "new_register_summary_1d" -> NewRegisterSummary.oneDay(player5, players, daySlice))
+
+  private lazy val rtpSnapshot = RiskCtrl.rtpSnapshot(player1h, daySlice)
+
   test("risk and register reports equal the report operators over the composed tiers") {
-    assertSameTable("risk_ctrl_player_1d", table("risk_ctrl_player_1d"),
-      RiskCtrl.playerOneDay(player1h, trans1h, player1d, trans1d, daySlice))
-    assertSameTable("risk_ctrl_game_1d", table("risk_ctrl_game_1d"),
-      RiskCtrl.gameOneDay(player1h, player1d, daySlice))
-    val snapshot = RiskCtrl.rtpSnapshot(player1h, daySlice)
+    otherReports.foreach { case (t, want) => assertSameTable(t, table(t), want) }
     assertSameTable("risk_ctrl_rtp_1d", table("risk_ctrl_rtp_1d"),
-      RiskCtrl.rtpLedgerMerge(snapshot.limit(0), snapshot, now))
-    assertSameTable("new_register_summary_1d", table("new_register_summary_1d"),
-      NewRegisterSummary.oneDay(player5, players, daySlice))
+      RiskCtrl.rtpLedgerMerge(rtpSnapshot.limit(0), rtpSnapshot, now))
+  }
+
+  /** A fresh warehouse holding the day's trans and player tiers only. */
+  private def tiersOnly(): Pipeline.Paths = {
+    val p = Pipeline.Paths(java.nio.file.Files.createTempDirectory("graft_reports").toString)
+    Pipeline.runTransDay(spark, vlog, p, day)
+    Pipeline.runPlayerDay(spark, plog, sites, p, day)
+    p
+  }
+
+  private def read(p: Pipeline.Paths, t: String): DataFrame = spark.read.parquet(s"${p.base}/$t")
+
+  test("a reports rerun merges the day's rtp ledger and leaves the other reports unchanged") {
+    val p = tiersOnly()
+    Pipeline.runReportsDay(spark, players, p, day, now)
+    // pinned before the rerun overwrites the files they were read from
+    val first = (otherReports.map(_._1) :+ "risk_ctrl_rtp_1d")
+      .map(t => t -> read(p, t).localCheckpoint()).toMap
+    val later = Timestamp.valueOf("2024-01-13 02:30:00")
+    Pipeline.runReportsDay(spark, players, p, day, later)
+    otherReports.foreach { case (t, _) => assertSameTable(t, read(p, t), first(t)) }
+    assertSameTable("risk_ctrl_rtp_1d", read(p, "risk_ctrl_rtp_1d"),
+      RiskCtrl.rtpLedgerMerge(first("risk_ctrl_rtp_1d"), rtpSnapshot, later))
+  }
+
+  test("a failing report write is rethrown only after the other report tables are written") {
+    val p = tiersOnly()
+    // checkpointed, so the analyzer cannot resolve `type` below the drop
+    val untyped = players.drop("type").localCheckpoint()
+    val err = intercept[AnalysisException](Pipeline.runReportsDay(spark, untyped, p, day, now))
+    assert(err.getMessage.contains("`type`"), err.getMessage)
+    assert(!new java.io.File(p.newRegister1d).exists(), "new_register_summary_1d written")
+    otherReports.filter(_._1 != "new_register_summary_1d")
+      .foreach { case (t, want) => assertSameTable(t, read(p, t), want) }
+    assertSameTable("risk_ctrl_rtp_1d", read(p, "risk_ctrl_rtp_1d"),
+      RiskCtrl.rtpLedgerMerge(rtpSnapshot.limit(0), rtpSnapshot, now))
   }
 
   test("every tier read prunes on its summary_date partitions") {

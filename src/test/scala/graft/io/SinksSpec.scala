@@ -38,7 +38,23 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("dynamic partition overwrite: re-running a slice is idempotent and " +
-      "leaves other partitions untouched") {
+      "leaves other partitions untouched")(rerunReplacesOnlyItsSlice())
+
+  test("overwriteSlices leaves the session's partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key)
+    rerunReplacesOnlyItsSlice()
+    assert(!spark.conf.getAll.contains(key), s"$key was left set")
+    // an explicit STATIC session conf must neither widen a rerun to the
+    // whole table nor be changed by the write
+    spark.conf.set(key, "STATIC")
+    try {
+      rerunReplacesOnlyItsSlice()
+      assert(spark.conf.get(key) === "STATIC")
+    } finally spark.conf.unset(key)
+  }
+
+  private def rerunReplacesOnlyItsSlice(): Unit = {
     val base = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/trans_5min"
     val day1 = TransSummary.fiveMinRange(vlog, "2024-01-02 00:00:00", "2024-01-03 00:00:00")
     val day2 = TransSummary.fiveMinRange(vlog, "2024-01-03 00:00:00", "2024-01-04 00:00:00")
